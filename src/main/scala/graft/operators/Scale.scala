@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -253,7 +253,8 @@ object Scale {
     * The fixed point is a star forest — every node points straight at
     * its component minimum. Rounds localCheckpoint so lineage stays
     * constant-depth; convergence is set-equality of successive edge
-    * sets (an anti-join + counts, no driver-side graph).
+    * sets (an anti-join behind an observed (count, hash-sum)
+    * signature; the graph is never collected).
     *
     * @param pairs undirected edges (u, v), u ≠ v (long ids)
     * @return (labels (doc_id, label = component min), rounds run)
@@ -282,15 +283,18 @@ object Scale {
         .filter(col("u") =!= col("v"))
         .distinct()
     }
-    // (count, hash-sum) signature: a CHEAP per-round stability probe
-    // (one scan of the materialized frame). Signature equality only
-    // TRIGGERS the exact set-equality check — convergence is always
-    // confirmed by the anti-join, so hash collisions cost one wasted
-    // check, never a wrong answer.
-    def sig(l: DataFrame): (Long, Long) = {
-      val r = l.agg(count(lit(1)),
-        sum(hash(col("u"), col("v")).cast("long"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    // (count, hash-sum) signature: a CHEAP per-round stability probe,
+    // observed on the checkpoint job that materializes the round — no
+    // extra job. Signature equality only TRIGGERS the exact
+    // set-equality check — convergence is always confirmed by the
+    // anti-join, so hash collisions cost one wasted check, never a
+    // wrong answer.
+    def checkpointWithSig(l: DataFrame): (DataFrame, (Long, Long)) = {
+      val obs = Observation()
+      val cp = l.observe(obs, count(lit(1)).as("n"),
+        sum(hash(col("u"), col("v")).cast("long")).as("h")).localCheckpoint(true)
+      val r = obs.get
+      (cp, (r("n").asInstanceOf[Long], Option(r("h")).fold(0L)(_.asInstanceOf[Long])))
     }
     // materialize the caller's pair plan ONCE — the label join at the
     // end must not re-run the candidate-generation upstream
@@ -300,13 +304,11 @@ object Scale {
       .filter(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint(true)
-    var l = smallStar(canon).localCheckpoint(true)
-    var s = sig(l)
+    var (l, s) = checkpointWithSig(smallStar(canon))
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(l)).localCheckpoint(true)
-      val s2 = sig(next)
+      val (next, s2) = checkpointWithSig(smallStar(largeStar(l)))
       converged = s2 == s && next.except(l).isEmpty
       l = next; s = s2; rounds += 1
     }

@@ -44,7 +44,9 @@ object Validation {
 
   /** Date-vs-folder consistency (script_transform.py:49-114): lenient —
     * a document is invalid only when BOTH the folder year/month and the
-    * fecha_corte year/month parse and disagree.
+    * fecha_corte year/month parse and disagree. `try_cast`: a free-text
+    * date ('desconocida', 'n/a') is unparsable, hence valid — an ANSI
+    * cast would throw on it and abort the whole folder.
     */
   def dateFolderCheck(transformed: DataFrame, folderName: String): DataFrame = {
     val m = "^.*?[_-]?(\\d{4})[_-](\\d{1,2})$".r
@@ -53,8 +55,8 @@ object Validation {
       case _ => (-1, -1)
     }
     val parts = split(col("fic.fecha_corte"), "-")
-    val jy = element_at(parts, 1).cast("int")
-    val jm = try_element_at(parts, lit(2)).cast("int")
+    val jy = element_at(parts, 1).try_cast("int")
+    val jm = try_element_at(parts, lit(2)).try_cast("int")
     val valid =
       if (fy < 0) lit(true)
       else when(col("fic.fecha_corte").isNull || jy.isNull || jm.isNull, true)

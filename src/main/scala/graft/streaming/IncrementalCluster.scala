@@ -247,30 +247,39 @@ object IncrementalCluster {
     // (doc_id, score) row would silently fan the member join out
     val batchScores = scores.groupBy(col("doc_id"))
       .agg(max(col("score")).as("batch_score"))
-    val newAffM = labels
-      .join(prevM.select(col("doc_id"), col("score").as("prev_score")),
-        Seq("doc_id"), "left")
+    // the fold, materialized ONCE: (doc_id, new label, score, old
+    // label) for every member of an affected component. All four
+    // relations of the epoch project from it, so none of their writes
+    // re-runs the components solve or the member joins.
+    val fold = labels
+      .join(prevM.select(col("doc_id"), col("label").as("old_label"),
+        col("score").as("prev_score")), Seq("doc_id"), "left")
       .join(batchScores, Seq("doc_id"), "left")
       .select(col("doc_id"), col("label"),
-        coalesce(col("prev_score"), col("batch_score")).as("score"))
+        coalesce(col("prev_score"), col("batch_score")).as("score"),
+        col("old_label"))
+      .localCheckpoint(true)
+    prevM.unpersist()
 
-    val affSurv = newAffM
+    val affSurv = fold
       .groupBy(col("label").as("cluster_id"))
       .agg(max(struct(col("score"), (-col("doc_id")).as("neg_id"))).as("best"),
         count(lit(1)).as("cluster_size"))
       .select(col("cluster_id"), (-col("best.neg_id")).as("survivor_id"),
         col("cluster_size"), col("best.score").as("score"))
     // labels absorbed by a merge no longer name a cluster: tombstone
-    // them so the resolved survivor view drops their stale election
-    val tombstones = affLabels.select(col("label").as("cluster_id"))
-      .join(affSurv.select(col("cluster_id")), Seq("cluster_id"), "left_anti")
+    // them so the resolved survivor view drops their stale election.
+    // Every member of an affected component is in the fold (the star
+    // edges reach all of them, and a stored cluster has at least two
+    // members), so its old labels are exactly the affected labels.
+    val tombstones = fold.filter(col("old_label").isNotNull)
+      .select(col("old_label").as("cluster_id")).distinct()
+      .join(fold.select(col("label").as("cluster_id")), Seq("cluster_id"), "left_anti")
       .select(col("cluster_id"), lit(null).cast("long").as("survivor_id"),
         lit(null).cast("long").as("cluster_size"),
         lit(null).cast("double").as("score"))
 
-    val labelChanges = newAffM
-      .join(prevM.select(col("doc_id"), col("label").as("old_label")),
-        Seq("doc_id"), "left")
+    val labelChanges = fold
       .filter(col("old_label").isNull || col("old_label") =!= col("label"))
       .select(col("doc_id"), col("old_label"), col("label").as("new_label"))
     val survivorChanges = affSurv
@@ -284,12 +293,11 @@ object IncrementalCluster {
 
     StreamingState.commitAppend(spark, path, batchId,
       Map(
-        "members" -> newAffM.withColumn("epoch", lit(batchId)),
+        "members" -> fold.drop("old_label").withColumn("epoch", lit(batchId)),
         "survivors" -> affSurv.unionByName(tombstones)
           .withColumn("epoch", lit(batchId)),
         "label_changes" -> labelChanges,
         "survivor_changes" -> survivorChanges))
-    prevM.unpersist()
     readChanges(spark, path, batchId)
   }
 

@@ -12,21 +12,25 @@ import graft.streaming.{IncrementalAnn, IncrementalCluster, IncrementalDedup,
   * (IncrementalCommitSpec) prove each index's epoch commit is atomic
   * in isolation, and tools/DropCheck proves steady-state equality —
   * this tool closes the gap between them by killing the WIRED
-  * dedup → cluster → span → ann → quality sequence at seeded-random
+  * dedup → cluster, span, ann and quality lanes at seeded-random
   * points, replaying, and requiring every state and report stream to
   * equal an uninterrupted run's.
   *
-  * Per drop, on the crashing root:
+  * [[GraftDrop.processDrop]] runs its four lanes concurrently, so a
+  * crash leaves each lane at its own step prefix. Per drop, on the
+  * crashing root:
   *
-  *  1. run only the first `k` of [[GraftDrop.processDrop]]'s nine
-  *     steps (`k` seeded-random per drop, 0 = crash before anything) —
-  *     the between-steps kill;
-  *  2. plant a junk file inside the NEXT step's target directory
-  *     (an index epoch dir with no commit marker, or a report
-  *     partition dir) — the mid-write kill: torn output that must be
-  *     invisible to readers and overwritten by recovery;
+  *  1. run each lane's first `k` steps only (`k` seeded-random per
+  *     lane and drop, 0 = crash before the lane's first step), all
+  *     lanes concurrently, as [[GraftDrop.run]] does — the
+  *     between-steps kill;
+  *  2. plant a junk file inside each cut lane's NEXT step's target
+  *     directory (an index epoch dir with no commit marker, or a
+  *     report partition dir) — the mid-write kill: torn output that
+  *     must be invisible to readers and overwritten by recovery;
   *  3. optionally (seeded coin) crash the RECOVERY itself the same
-  *     way — a second partial run + junk plant;
+  *     way — a second partial run, each lane cut at or after its first
+  *     cut, + junk plants;
   *  4. replay the batch id to completion, exactly as the streaming
   *     checkpoint restart would before admitting the next file batch.
   *
@@ -94,44 +98,71 @@ object CrashCheck {
     true
   }
 
-  private def diff(what: String, a: DataFrame, b: DataFrame,
-      err: String => Unit): Unit = {
-    val aOnly = a.exceptAll(b).count()
-    val bOnly = b.exceptAll(a).count()
-    if (aOnly != 0L || bOnly != 0L)
-      err(s"$what diverged: $aOnly rows only in crashed run, " +
-        s"$bOnly only in uninterrupted run")
-  }
+  /** Every public read surface of a graft-drop index root, named. */
+  private def surfaces(spark: SparkSession, root: String): Seq[(String, DataFrame)] =
+    Seq(
+      "dedup index" -> IncrementalDedup.readIndex(spark, s"$root/dedup"),
+      "cluster members" -> IncrementalCluster.readMembers(spark, s"$root/clusters"),
+      "cluster survivors" -> IncrementalCluster.readSurvivors(spark, s"$root/clusters"),
+      "span windows" -> IncrementalSpanIndex.readIndex(spark, s"$root/spans"),
+      "ann vectors" -> IncrementalAnn.readIndex(spark, s"$root/ann"),
+      "quality trend" -> IncrementalQuality.readTrend(spark, s"$root/quality"),
+      "quality profile" -> IncrementalQuality.readProfile(spark, s"$root/quality"),
+      "quality totals" -> IncrementalQuality.readTotals(spark, s"$root/quality")) ++
+    Seq("pairs", "cluster_labels", "cluster_survivors", "spans", "neighbors")
+      .map(rep => s"reports/$rep" -> spark.read.parquet(s"$root/reports/$rep"))
+
+  /** One message per read surface on which two graft-drop index roots
+    * differ (symmetric exceptAll); empty when they are equal.
+    */
+  def divergences(spark: SparkSession, a: String, b: String,
+      aName: String = "crashed run",
+      bName: String = "uninterrupted run"): Seq[String] =
+    surfaces(spark, a).zip(surfaces(spark, b)).flatMap { case ((what, x), (_, y)) =>
+      val aOnly = x.exceptAll(y).count()
+      val bOnly = y.exceptAll(x).count()
+      if (aOnly == 0L && bOnly == 0L) None
+      else Some(s"$what diverged: $aOnly rows only in $aName, $bOnly only in $bName")
+    }
+
+  /** A lane cut, as `lane k/n`, with the torn step when one was planted. */
+  private def describe(cut: Map[String, Int], torn: Set[String]): String =
+    GraftDrop.lanes.map { case (lane, steps) =>
+      val k = cut(lane)
+      s"$lane $k/${steps.size}" +
+        (if (k < steps.size && torn(lane)) s" (${steps(k)} torn)" else "")
+    }.mkString(", ")
 
   def check(spark: SparkSession, dir: String, drops: Int = 4,
-      seed: Long = 42L, maxErrs: Int = 20): Seq[String] = {
-    val errs = scala.collection.mutable.ArrayBuffer.empty[String]
-    def err(m: String): Unit = if (errs.size < maxErrs) { errs += m; () }
+      seed: Long = 42L): Seq[String] = {
     val rng = new scala.util.Random(seed)
-    val nSteps = GraftDrop.stepNames.size
     val base = java.nio.file.Files.createTempDirectory("crashcheck").toString
     val crashed = s"$base/crashed"
     val clean = s"$base/clean"
+    // plants the torn write of every lane the cut stopped short;
+    // returns the lanes where one was planted
+    def plantTorn(cut: Map[String, Int], id: Long): Set[String] =
+      GraftDrop.lanes.collect { case (lane, steps) if cut(lane) < steps.size &&
+          plantJunk(spark, crashed, steps(cut(lane)), id) => lane }.toSet
     try {
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val kills = scala.collection.mutable.ArrayBuffer.empty[String]
       for (i <- 0 until drops) {
         val batch = docs.filter(pmod(col("doc_id"), lit(drops)) === i)
-        // crashing root: partial run at a seeded kill point + torn write
-        val k = rng.nextInt(nSteps + 1)
-        GraftDrop.processDrop(batch, crashed, i.toLong, stopAfter = k)
-        val torn = k < nSteps &&
-          plantJunk(spark, crashed, GraftDrop.stepNames(k), i.toLong)
-        var killLog = s"drop $i: killed at step $k" +
-          (if (k == nSteps) " (completed)"
-           else if (torn) s" (${GraftDrop.stepNames(k)} torn)" else "")
-        // seeded coin: crash the recovery too, at a second point
-        if (k < nSteps && rng.nextBoolean()) {
-          val k2 = k + rng.nextInt(nSteps + 1 - k)
-          GraftDrop.processDrop(batch, crashed, i.toLong, stopAfter = k2)
-          if (k2 < nSteps)
-            plantJunk(spark, crashed, GraftDrop.stepNames(k2), i.toLong)
-          killLog += s", recovery killed at step $k2"
+        // crashing root: each lane stopped at its own seeded kill
+        // point + torn writes
+        val cut = GraftDrop.lanes.map { case (lane, steps) =>
+          lane -> rng.nextInt(steps.size + 1) }.toMap
+        GraftDrop.processDrop(batch, crashed, i.toLong, stopAfter = cut)
+        var killLog = s"drop $i: killed at ${describe(cut, plantTorn(cut, i.toLong))}"
+        // seeded coin: crash the recovery too, every lane at or after
+        // its first cut
+        if (GraftDrop.lanes.exists { case (lane, steps) => cut(lane) < steps.size } &&
+            rng.nextBoolean()) {
+          val cut2 = GraftDrop.lanes.map { case (lane, steps) =>
+            lane -> (cut(lane) + rng.nextInt(steps.size + 1 - cut(lane))) }.toMap
+          GraftDrop.processDrop(batch, crashed, i.toLong, stopAfter = cut2)
+          killLog += s"; recovery killed at ${describe(cut2, plantTorn(cut2, i.toLong))}"
         }
         // the replay the streaming restart performs before batch i+1
         GraftDrop.processDrop(batch, crashed, i.toLong)
@@ -141,35 +172,7 @@ object CrashCheck {
         ()
       }
       kills.foreach(k => println(s"[crash-check] $k"))
-
-      diff("dedup index", IncrementalDedup.readIndex(spark, s"$crashed/dedup"),
-        IncrementalDedup.readIndex(spark, s"$clean/dedup"), err)
-      diff("cluster members",
-        IncrementalCluster.readMembers(spark, s"$crashed/clusters"),
-        IncrementalCluster.readMembers(spark, s"$clean/clusters"), err)
-      diff("cluster survivors",
-        IncrementalCluster.readSurvivors(spark, s"$crashed/clusters"),
-        IncrementalCluster.readSurvivors(spark, s"$clean/clusters"), err)
-      diff("span windows",
-        IncrementalSpanIndex.readIndex(spark, s"$crashed/spans"),
-        IncrementalSpanIndex.readIndex(spark, s"$clean/spans"), err)
-      diff("ann vectors", IncrementalAnn.readIndex(spark, s"$crashed/ann"),
-        IncrementalAnn.readIndex(spark, s"$clean/ann"), err)
-      diff("quality trend",
-        IncrementalQuality.readTrend(spark, s"$crashed/quality"),
-        IncrementalQuality.readTrend(spark, s"$clean/quality"), err)
-      diff("quality profile",
-        IncrementalQuality.readProfile(spark, s"$crashed/quality"),
-        IncrementalQuality.readProfile(spark, s"$clean/quality"), err)
-      diff("quality totals",
-        IncrementalQuality.readTotals(spark, s"$crashed/quality"),
-        IncrementalQuality.readTotals(spark, s"$clean/quality"), err)
-      Seq("pairs", "cluster_labels", "cluster_survivors", "spans", "neighbors")
-        .foreach { rep =>
-          diff(s"reports/$rep",
-            spark.read.parquet(s"$crashed/reports/$rep"),
-            spark.read.parquet(s"$clean/reports/$rep"), err)
-        }
+      val errs = divergences(spark, crashed, clean)
       if (errs.isEmpty) {
         val nPairs = spark.read.parquet(s"$clean/reports/pairs").count()
         val nSpans = spark.read.parquet(s"$clean/reports/spans").count()
@@ -178,7 +181,7 @@ object CrashCheck {
           s"all five states + report streams equal after kill-anywhere replay " +
           s"($nPairs pairs, $nSpans spans, $nNeighbors neighbor rows)")
       }
-      errs.toSeq
+      errs
     } finally {
       graft.streaming.StreamingState.fsFor(spark, base)
         .delete(new org.apache.hadoop.fs.Path(base), true)

@@ -96,6 +96,19 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(cal.getAs[Any]("entidad_calificadora_normalizada") == null)
   }
 
+  test("date-vs-folder check treats free-text fecha_corte as unparsable, hence valid") {
+    import spark.implicits._
+    val docs = Seq(
+      ("a.json", "desconocida"), ("b.json", "n/a"), ("c.json", "2025-07-31"),
+      ("d.json", "2025-01-31"), ("e.json", null))
+      .toDF("filename", "fecha_corte")
+      .select(col("filename"), struct(col("fecha_corte")).as("fic"))
+    val valid = graft.quality.Validation.dateFolderCheck(docs, "json_raw_2025_07")
+      .collect().map(r => r.getString(0) -> r.getBoolean(2)).toMap
+    assert(valid === Map("a.json" -> true, "b.json" -> true, "c.json" -> true,
+      "d.json" -> false, "e.json" -> true))
+  }
+
   test("incremental dedup index skips unshinglable docs and stays replay-safe on them") {
     import spark.implicits._
     val idx = java.nio.file.Files.createTempDirectory("edge_idx")

@@ -35,27 +35,28 @@ class GraftDropSpec extends AnyFunSuite {
     Files.write(Paths.get(dir, name), lines.getBytes(UTF_8))
   }
 
+  // drop 1: 16 ANN plane-seeders + a distinctive document
+  private val drop1 = (0L until 16L).map(i =>
+    (i, s"filler document number $i with words w$i w${i * 3 % 7} w${i % 5}")) :+
+    (50L, "quarterly earnings report for the acme corporation fiscal year")
+  // drop 2: an exact text copy of doc 3 (dedup must pair them), a
+  // shuffled-word copy of doc 50 (identical bag-of-words → identical
+  // stub embedding, ANN must rank it first), and an unrelated doc
+  private val drop2 = Seq(
+    (201L, "filler document number 3 with words w3 w2 w3"),
+    (200L, "acme corporation fiscal report quarterly earnings the for year"),
+    (202L, "completely unrelated gardening tips about tomato seedlings"))
+
   test("two drops: cross-drop dups and neighbors via persisted indexes, replay no-op") {
     val in = Files.createTempDirectory("drop_in").toString
     val index = Files.createTempDirectory("drop_index").toString
 
-    // drop 1: 16 ANN plane-seeders + a distinctive document
-    val drop1 = (0L until 16L).map(i =>
-      (i, s"filler document number $i with words w$i w${i * 3 % 7} w${i % 5}")) :+
-      (50L, "quarterly earnings report for the acme corporation fiscal year")
     writeDrop(in, "drop1.json", drop1)
     GraftDrop.run(spark, in, index)
 
     val pairs1 = spark.read.parquet(s"$index/reports/pairs").count()
     assert(pairs1 == 0, s"drop 1 has no near-dups, got $pairs1 pairs")
 
-    // drop 2: an exact text copy of doc 3 (dedup must pair them), a
-    // shuffled-word copy of doc 50 (identical bag-of-words → identical
-    // stub embedding, ANN must rank it first), and an unrelated doc
-    val drop2 = Seq(
-      (201L, "filler document number 3 with words w3 w2 w3"),
-      (200L, "acme corporation fiscal report quarterly earnings the for year"),
-      (202L, "completely unrelated gardening tips about tomato seedlings"))
     writeDrop(in, "drop2.json", drop2)
     GraftDrop.run(spark, in, index)
 
@@ -150,6 +151,27 @@ class GraftDropSpec extends AnyFunSuite {
       == graft.streaming.IncrementalQuality.dropRules.size.toLong)
     assert(graft.streaming.IncrementalQuality
       .readProfile(spark, s"$index/quality").count() == 2L)
+  }
+
+  test("concurrent lanes leave the same counts, reports and state as the serial lane order") {
+    import spark.implicits._
+    val concurrent = Files.createTempDirectory("drop_concurrent").toString
+    val serial = Files.createTempDirectory("drop_serial").toString
+    Seq(drop1, drop2).zipWithIndex.foreach { case (docs, i) =>
+      val b = docs.toDF("doc_id", "text")
+      val c = GraftDrop.processDrop(b, concurrent, i.toLong)
+      // the serial order on the same code path: one lane per call,
+      // every other lane cut before its first step
+      val s = GraftDrop.lanes.map { case (lane, _) =>
+        GraftDrop.processDrop(b, serial, i.toLong, stopAfter =
+          GraftDrop.lanes.collect { case (other, _) if other != lane => other -> 0 }.toMap)
+      }.reduce(_ ++ _)
+      assert(c === s, s"drop $i counts")
+      assert(c("pairs") === (if (i == 0) 0L else 1L), s"drop $i counts: $c")
+    }
+    val diverged = graft.tools.CrashCheck.divergences(spark, concurrent, serial,
+      "concurrent run", "serial run")
+    assert(diverged.isEmpty, diverged.mkString("\n"))
   }
 
   private def writeSourcedDrop(dir: String, name: String,
